@@ -2774,7 +2774,7 @@ object SparkEntry {
         // the growing corpus once per iteration; checkpointing wide
         // makes all of those no-ops (one exchange total).
         .transform(graft.ops.Par.widen)
-        .localCheckpoint()
+        .transform(graft.ops.Par.pin)
 
       def stageRow(df: DataFrame): Array[Long] = {
         val r = df.agg(
@@ -2826,11 +2826,12 @@ object SparkEntry {
           .select(col("doc_id"), col("text"), col("tok0"))
         val seen =
           if (i == 0) bPass.limit(0) else passUpTo(versions(i - 1))
-        val adm = graft.ops.Dedup.incrementalDedup(
-          seen, bPass, "doc_id", "text", threshold = 0.6)
-        val (an, at) = survivorRow(adm)
+        // the version's cascade pins are released as soon as its
+        // survivor row is collected; `g` stays pinned for the next one
+        val (an, at) = graft.ops.Par.scoped(survivorRow(
+          graft.ops.Dedup.incrementalDedup(
+            seen, bPass, "doc_id", "text", threshold = 0.6)))
         admN += an; admT += at
-        graft.ops.Dedup.releasePersisted()
       }
 
       // --- from-scratch over the full corpus, smaller-id-wins
@@ -3159,7 +3160,7 @@ object SparkEntry {
     // paragraph-level near-dup with reassembly → doc-level 3-gram
     // near-dup (keep-first) → contamination canary screen → UniMax
     // language mix → 512-token sequence packing. Stage frames are
-    // localCheckpoint-ed once so the cascades run once, not per
+    // pinned once so the cascades run once, not per
     // attrition row; rows 0-6 count surviving docs/tokens, row 7 the
     // allocated token budget, row 8 the packed bins/tokens. Doubles as
     // the composition regression test over the whole operator family.
@@ -3174,14 +3175,14 @@ object SparkEntry {
         when(m4 === 0, lit("é")).when(m4 === 1, lit("Å"))
           .when(m4 === 2, lit("Ω")).otherwise(lit("")))
       val text1 = T.nfcNormalize(T.fixMojibake(planted))
-      // Stage frames are LOCAL-CHECKPOINTED, not persisted: the cascade
-      // plans carry lambda/native expressions whose canonicalized forms
-      // defeat CacheManager's lookup (measured: a persisted s6 re-ran
-      // its whole lineage on EVERY downstream aggregate, ~2.6 s each at
-      // sf0.1), while localCheckpoint truncates the lineage into a
-      // LogicalRDD that every consumer reads directly — each stage
-      // computes exactly once. The frames are survivor-corpus-sized
-      // rows, freed by the ContextCleaner when unreachable.
+      // Stage frames are PINNED, not persisted: the cascade plans carry
+      // lambda/native expressions whose canonicalized forms defeat
+      // CacheManager's lookup (measured: a persisted s6 re-ran its whole
+      // lineage on EVERY downstream aggregate, ~2.6 s each at sf0.1),
+      // while a pin truncates the lineage into a LogicalRDD that every
+      // consumer reads directly — each stage computes exactly once. Each
+      // cascade's own pins and code arrays are released as soon as the
+      // stage built on it is pinned (Par.pinScoped).
       val base = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"),
           T.tokenCount(col("text")).cast("long").as("tok0"), text1.as("text1"))
@@ -3193,29 +3194,26 @@ object SparkEntry {
         // mojibake/NFC/langid/quality kernels parallelize and every
         // downstream cascade's Par.widen gate then no-ops).
         .transform(graft.ops.Par.widen)
-        .localCheckpoint()
+        .transform(graft.ops.Par.pin)
       val s3 = base.filter(col("p2") && col("p3"))
-      val pd = De.paragraphDedup(s3.select(col("doc_id"), col("text1")),
-        "doc_id", "text1", threshold = 0.7,
-        paragraphs = De.tokenWindows(20))
-      val s4 = s3
-        .join(pd.filter(col("n_kept") > 0)
-          .select(col("doc_id"), col("text_kept").as("text2")), "doc_id")
-        .withColumn("tok2", T.tokenCount(col("text2")).cast("long"))
-        .localCheckpoint()
-      val pairs = De.nearDuplicatesExact(
-        s4.select(col("doc_id"), col("text2")), "doc_id", "text2",
-        threshold = 0.6, includeMinHashCandidates = false)
-      val s5 = s4.join(
-        pairs.select(col("id_b").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+      val s4 = graft.ops.Par.pinScoped {
+        val pd = De.paragraphDedup(s3.select(col("doc_id"), col("text1")),
+          "doc_id", "text1", threshold = 0.7,
+          paragraphs = De.tokenWindows(20))
+        s3.join(pd.filter(col("n_kept") > 0)
+            .select(col("doc_id"), col("text_kept").as("text2")), "doc_id")
+          .withColumn("tok2", T.tokenCount(col("text2")).cast("long"))
+      }
+      val s5 = graft.ops.Par.pinScoped {
+        val pairs = De.nearDuplicatesExact(
+          s4.select(col("doc_id"), col("text2")), "doc_id", "text2",
+          threshold = 0.6, includeMinHashCandidates = false)
+        s4.join(pairs.select(col("id_b").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti")
+      }
       val canaries = Seq("hash join", "fast data", "data data")
-      val s6 = s5.filter(aggregate(
-        T.ahoCounts(col("text2"), canaries), lit(0L), (a, x) => a + x) === 0L)
-        .localCheckpoint()
-      // the cascades' own code-array caches are no longer needed
-      De.releasePersisted()
+      val s6 = graft.ops.Par.pin(s5.filter(aggregate(
+        T.ahoCounts(col("text2"), canaries), lit(0L), (a, x) => a + x) === 0L))
       // EAGER stage aggregates into a local 9-row frame: a lazy
       // 9-branch union would hand Catalyst the full multi-cascade
       // lineage NINE times over — at sf0.1 the analysis/optimization of

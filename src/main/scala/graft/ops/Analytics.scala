@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -271,7 +271,7 @@ object Analytics {
     * edges (`edge.t ≥ arrival` is monotone), so keeping one row per
     * (seed, node) — the earliest arrival — loses nothing. Each round
     * is one equi-join frontier expansion + a min-merge (map-side
-    * combinable); lineage cut per round with a lazy localCheckpoint
+    * combinable); lineage cut per round with a lazy Par.cut
     * (the CC/ANF discipline). State is O(seeds × reached nodes), never
     * walks.
     *
@@ -291,9 +291,9 @@ object Analytics {
       val expanded = dist.join(e,
           dist("node") === e("src") && e("__et") >= dist("t"))
         .select(dist("seed"), e("dst").as("node"), col("__et").as("t"))
-      dist = dist.unionByName(expanded)
-        .groupBy(col("seed"), col("node")).agg(min(col("t")).as("t"))
-        .localCheckpoint(false)
+      dist = Par.cut(dist.unionByName(expanded)
+        .groupBy(col("seed"), col("node")).agg(min(col("t")).as("t")),
+        eager = false)
     }
     dist
   }
@@ -320,9 +320,9 @@ object Analytics {
       val expanded = dist.join(e, dist("node") === e("src"))
         .select(dist("seed"), e("dst").as("node"),
           (dist("cost") + col("__w")).as("cost"))
-      dist = dist.unionByName(expanded)
-        .groupBy(col("seed"), col("node")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint(false)
+      dist = Par.cut(dist.unionByName(expanded)
+        .groupBy(col("seed"), col("node")).agg(min(col("cost")).as("cost")),
+        eager = false)
     }
     dist
   }
@@ -453,8 +453,8 @@ object Analytics {
     * Shape at scale: per round one map-side-combinable degree count +
     * two semi-joins on the vertex key — edges and degrees stay
     * DataFrames end-to-end, nothing is collected; with many rounds one
-    * would localCheckpoint every few rounds to cut lineage (the
-    * [[pageRank]] discipline).
+    * would cut the lineage every few rounds (the [[pageRank]]
+    * discipline).
     */
   def kCoreMembers(edges: DataFrame, k: Int, rounds: Int = 3): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k=$k rounds=$rounds")
@@ -473,19 +473,19 @@ object Analytics {
     // (degree count + join input) and lazily re-deriving it would
     // re-run ALL prior rounds each time — ~2^rounds recomputation
     // (measured: q139 6.9 s lazy vs ~1 s persisted at sf0.1). The
-    // previous round's block releases as soon as the next materializes.
+    // previous round's block releases as soon as the next materializes;
+    // the last one, which the result reads, at the query's drain.
     var prev: Option[DataFrame] = None
     for (_ <- 1 to rounds) {
-      val cur = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cur = Par.persist(e)
       cur.count()
-      prev.foreach(_.unpersist())
+      prev.foreach(Par.unpin)
       prev = Some(cur)
       val keep = cur.groupBy(col("u")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("u").as("kv"))
       e = cur.join(keep.withColumnRenamed("kv", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("kv", "v"), Seq("v"), "left_semi")
     }
-    // the final (unpersisted) round reads the last cached round twice
     e.groupBy(col("u").as("user_id")).agg(count(lit(1)).as("core_degree"))
   }
 
@@ -512,8 +512,8 @@ object Analytics {
     // Lineage cut every CUT iterations: without it the logical plan (and
     // Catalyst analysis time) doubles per iteration — fine at the fixed 3
     // the oracle queries use, pathological at 20+. Same discipline as
-    // Dedup.connectedComponents; each cut releases the previous one's
-    // block so at most one checkpoint block is live at a time.
+    // Dedup.connectedComponents; each cut releases the previous one, so
+    // at most one is live at a time.
     val CUT = 5
     var prevCut: DataFrame = null
     for (i <- 1 to iterations) {
@@ -528,22 +528,11 @@ object Analytics {
           (lit(1.0 - damping) / col("__n") +
             lit(damping) * coalesce(col("__in"), lit(0.0))).as("rank"))
       if (i % CUT == 0 && i < iterations) {
-        val cut = ranks.localCheckpoint(true)
-        if (prevCut != null) GraftSqlBridge.unpersistCheckpoint(prevCut, blocking = true)
+        val cut = Par.cut(ranks, eager = true)
+        if (prevCut != null) Par.unpin(prevCut)
         prevCut = cut
         ranks = cut
       }
-    }
-    if (prevCut != null) {
-      // The returned frame is built on the last cut's checkpoint blocks,
-      // and the caller's action may RE-PLAN (DataFrameWriter builds a
-      // fresh QueryExecution — registered shuffle outputs are not
-      // reused), so the blocks must outlive this call: deferred release
-      // via the persisted-registry lifecycle (same fix as
-      // Dedup.connectedComponents' fixpoint edges; the prior eager
-      // unpersist was the identical CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-      // latent at iterations >= the cut interval).
-      Dedup.trackCheckpoint(prevCut)
     }
     ranks
   }
@@ -830,18 +819,18 @@ object Analytics {
     import spark.implicits._
     val sym = edges.select(col("a").cast("long").as("u"),
       col("b").cast("long").as("v")).filter(col("u") =!= col("v"))
-    val both = sym.union(sym.select(col("v").as("u"), col("u").as("v")))
-      .distinct().localCheckpoint(true) // consumed once per hop
+    val both = Par.pin(sym.union(sym.select(col("v").as("u"), col("u").as("v")))
+      .distinct()) // consumed once per hop
     // checkpointed: the gate count and the per-path seed share ONE
     // distinct computation (r16 review finding: the seed re-derived it);
     // a forced-sketch gate (<= 0) skips the count job entirely
-    val nodes = both.select(col("u").as("v")).distinct().localCheckpoint(true)
+    val nodes = Par.pin(both.select(col("u").as("v")).distinct())
     val counts =
       if (exactNodeThreshold > 0 && nodes.count() <= exactNodeThreshold)
         exactAnf(both, nodes, maxHops)
       else hyperBallAnf(both, nodes, maxHops)
-    GraftSqlBridge.unpersistCheckpoint(nodes, blocking = false)
-    GraftSqlBridge.unpersistCheckpoint(both, blocking = false)
+    Par.unpin(nodes)
+    Par.unpin(both)
     counts.toDF("hop", "n_pairs")
   }
 
@@ -854,7 +843,7 @@ object Analytics {
     */
   private def exactAnf(both: DataFrame, nodes: DataFrame,
       maxHops: Int): Seq[(Long, Long)] = {
-    var reach = nodes.select(col("v"), col("v").as("w")).localCheckpoint(true)
+    var reach = Par.cut(nodes.select(col("v"), col("v").as("w")), eager = true)
     var frontier = reach
     var total = reach.count()
     val out = scala.collection.mutable.ArrayBuffer((0L, total))
@@ -864,14 +853,13 @@ object Analytics {
         val grown = frontier
           .join(both.select(col("u").as("w"), col("v").as("x")), "w")
           .select(col("v"), col("x").as("w")).distinct()
-        val newPairs = grown.join(reach, Seq("v", "w"), "left_anti")
-          .localCheckpoint(true)
+        val newPairs = Par.cut(
+          grown.join(reach, Seq("v", "w"), "left_anti"), eager = true)
         val nNew = newPairs.count()
         // disjoint by the anti-join and internally distinct: plain union
-        val nextReach = reach.union(newPairs).localCheckpoint(true)
-        GraftSqlBridge.unpersistCheckpoint(reach, blocking = false)
-        if (!(frontier eq reach))
-          GraftSqlBridge.unpersistCheckpoint(frontier, blocking = false)
+        val nextReach = Par.cut(reach.union(newPairs), eager = true)
+        Par.unpin(reach)
+        Par.unpin(frontier)
         reach = nextReach
         frontier = newPairs
         growing = nNew > 0
@@ -879,9 +867,8 @@ object Analytics {
         out += ((h.toLong, total))
       } else out += ((h.toLong, total))
     }
-    GraftSqlBridge.unpersistCheckpoint(reach, blocking = false)
-    if (!(frontier eq reach))
-      GraftSqlBridge.unpersistCheckpoint(frontier, blocking = false)
+    Par.unpin(reach)
+    Par.unpin(frontier)
     out.toSeq
   }
 
@@ -938,7 +925,7 @@ object Analytics {
     import spark.implicits._
     var regs = nodes.select(col("v")).as[Long]
       .map(v => (v, graft.ops.Analytics.initRegs(v))).toDF("node", "r")
-      .localCheckpoint(true)
+      .transform(Par.cut(_, eager = true))
     // per-node estimates quantized to integer MICROUNITS before the sum:
     // long addition is associative, so N(h) is bit-stable across task
     // orders (r16 review finding: a double reduce(_+_) could flip the
@@ -959,12 +946,12 @@ object Analytics {
         .as[(Long, Array[Byte])]
       val next = contrib.groupByKey(_._1)
         .reduceGroups((x, y) => (x._1, graft.ops.Analytics.maxRegs(x._2, y._2)))
-        .map(_._2).toDF("node", "r").localCheckpoint(true)
-      GraftSqlBridge.unpersistCheckpoint(regs, blocking = false)
+        .map(_._2).toDF("node", "r").transform(Par.cut(_, eager = true))
+      Par.unpin(regs)
       regs = next
       out += ((h.toLong, census(regs)))
     }
-    GraftSqlBridge.unpersistCheckpoint(regs, blocking = false)
+    Par.unpin(regs)
     out.toSeq
   }
 }

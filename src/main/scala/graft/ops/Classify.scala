@@ -331,13 +331,12 @@ object Classify {
       .select(col("id"), col("label"), col("is_train"),
         explode(split(lower(col("text")), "\\s+")).as("tok"))
       .filter(col("tok") =!= "")
-    val feats = toks
+    val feats = Par.pin(toks
       .withColumn("b", tokenBucket(col("tok"), dim))
       .groupBy(col("id"), col("label"), col("is_train"), col("b"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val labels = () => labeled.select(col("id"), col("label"), col("is_train"))
-      .localCheckpoint() // text-free: 3 narrow columns per doc
+      .agg(count(lit(1)).as("cnt")))
+    val labels = () => Par.pin( // text-free: 3 narrow columns per doc
+      labeled.select(col("id"), col("label"), col("is_train")))
     (labels, feats)
   }
 

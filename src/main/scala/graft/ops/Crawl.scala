@@ -165,7 +165,6 @@ object Crawl {
       .select(col("u"), col("v"), lit(1L).as("hops"),
         col("k").isNull.as("done"))
     var jump = 1L
-    var prevCkpt: DataFrame = null
     while (jump < maxHops) {
       // not-done entries compose with the map at their landing point;
       // every not-done v IS a source (else done would be true), so the
@@ -175,17 +174,11 @@ object Crawl {
         .join(m.as("b"), col("a.v") === col("b.u"))
         .select(col("a.u").as("u"), col("b.v").as("v"),
           (col("a.hops") + col("b.hops")).as("hops"), col("b.done").as("done"))
-      m = settled.unionByName(hopped).localCheckpoint(true)
-      if (prevCkpt != null)
-        org.apache.spark.sql.GraftSqlBridge
-          .unpersistCheckpoint(prevCkpt, blocking = false)
-      prevCkpt = m
+      val prev = m
+      m = Par.cut(settled.unionByName(hopped), eager = true)
+      Par.unpin(prev)
       jump *= 2
     }
-    // the settled map must outlive this call (the caller's action may
-    // re-plan — the CC block-release lesson): deferred release via the
-    // persisted-registry lifecycle Verify/Bench drain between queries
-    if (prevCkpt != null) Dedup.trackCheckpoint(m)
     m.select(col("u").as("url"),
       when(col("done") && col("hops") <= maxHops, col("v")).as("final_url"),
       when(col("done") && col("hops") <= maxHops, col("hops")).as("hops"))

@@ -216,85 +216,20 @@ object Dedup {
     // per-doc collect+sort four times (measured 9.0 s -> 2.6 s on the
     // sf0.1 char-ngram pipeline). Unlike the exploded table (codegen,
     // cheaper to recompute than cache), the aggregated arrays are the
-    // expensive artifact worth keeping; blocks are reclaimed by Spark's
-    // ContextCleaner once the frame is unreachable. LIFECYCLE CAVEAT for
-    // long-lived sessions: Spark's CacheManager matches cached plans
-    // semantically, so re-running a dedup pipeline in the SAME session
-    // after the input path's files changed can serve the stale cached
-    // arrays, and repeated invocations accumulate MEMORY_AND_DISK blocks.
-    // Call [[Dedup.releasePersisted]] after consuming the pipeline's
-    // result (Verify does, per query); Bench and ScaleProbe instead run
-    // spark.catalog.clearCache() before every timed pass, which drops
-    // these blocks along with everything else.
-    trackPersist(exploded.join(dict.select(col("__f"), col("__code")), "__f")
+    // expensive artifact worth keeping. Spark's CacheManager matches
+    // cached plans semantically, so the query's drain also keeps a later
+    // run over a changed input path from reading these stale arrays.
+    Par.persist(exploded.join(dict.select(col("__f"), col("__code")), "__f")
       .groupBy(col("id"))
       .agg(aggs.head, aggs.tail: _*))
   }
 
-  /** Frames persisted by [[codedSetsFromFeatures]]. STRONG references:
-    * Spark's CacheManager pins the cached plan regardless of this
-    * registry, so a weak ref could be GC-cleared while the blocks are
-    * still resident — releasePersisted would then silently skip blocks
-    * it can no longer reach. The frame objects themselves are plan-sized
-    * (small); the registry is drained on every release call.
+  /** Releases every pin and persisted frame the calling query made (see
+    * [[Par]]). Call after the action that consumes a query's result when
+    * the session is long-lived or the input files may change between
+    * runs; another query's pins, on another thread, are untouched.
     */
-  private val persisted =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
-  /** Persist an arbitrary frame under the same lifecycle as the dedup
-    * code arrays: MEMORY_AND_DISK now, released by the next
-    * [[releasePersisted]] call. For multi-branch compositions whose
-    * shared stage would otherwise recompute a cascade per consuming
-    * aggregate (the internal code-array index above is the in-tree
-    * user; composition queries now favor localCheckpoint, which also
-    * truncates lineage).
-    */
-  def trackPersist(df: DataFrame): DataFrame = {
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    persisted.add(cached)
-    cached
-  }
-
-  /** Checkpointed frames whose blocks must OUTLIVE the producing call:
-    * a returned result built on a localCheckpoint cannot release its
-    * blocks before the caller's action, because the caller may RE-PLAN
-    * the query (DataFrameWriter builds a fresh QueryExecution with new
-    * exchanges, so registered shuffle outputs are NOT reused) and the
-    * re-planned map stages read the checkpoint blocks again. Found by
-    * the gate-lifted q43 verification run: eager unpersist of the
-    * fixpoint edge set made write-after-connectedComponents die with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Registered frames are released
-    * by the next [[releasePersisted]] — the same drain point Verify,
-    * Bench, and ScaleProbe already call between queries.
-    */
-  private val checkpointed =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
-  def trackCheckpoint(df: DataFrame): DataFrame = {
-    checkpointed.add(df)
-    df
-  }
-
-  /** Unpersists every cached code-array frame produced so far. Call after
-    * the action that consumes a dedup pipeline's result when the session
-    * is long-lived or the input files may change between runs (the
-    * persisted plans otherwise both pin storage blocks and can be
-    * semantically matched by a later run over the mutated path).
-    */
-  def releasePersisted(): Unit = {
-    var df = persisted.poll()
-    while (df != null) {
-      try df.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => }
-      df = persisted.poll()
-    }
-    var cp = checkpointed.poll()
-    while (cp != null) {
-      try GraftSqlBridge.unpersistCheckpoint(cp, blocking = false)
-      catch { case scala.util.control.NonFatal(_) => }
-      cp = checkpointed.poll()
-    }
-  }
+  def releasePersisted(): Unit = Par.drain()
 
   /** The (index, probe) prefix tables SLICED from the sorted code arrays
     * (same contract as the former window-ranked variant): `__f` is the
@@ -1114,11 +1049,10 @@ object Dedup {
       smallGraphEdgeThreshold: Long = defaultEdgeGate): DataFrame = {
     // Undirected simple edges u != v (self loops are implicit in the
     // star operations).
-    var edges = pairs
+    var edges = Par.cut(pairs
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
 
     // Small-graph fast path: near-dup edge sets are usually FAR smaller
     // than the corpus (dedup pairs, not documents). Below the threshold
@@ -1131,7 +1065,7 @@ object Dedup {
     val edgeCount = edges.count()
     if (edgeCount <= smallGraphEdgeThreshold) {
       val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      GraftSqlBridge.unpersistCheckpoint(edges, blocking = true) // collected — release the block
+      Par.unpin(edges) // collected — release the pin
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var root = x
@@ -1199,11 +1133,11 @@ object Dedup {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      // LAZY local checkpoint: the signature aggregate is the action that
+      // LAZY cut: the signature aggregate is the action that
       // materializes it, so each round costs ONE job (eager checkpointing
       // would spend a second job per round just to materialize — measured
       // round overhead halves on small graphs where scheduling dominates)
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
+      val next = Par.cut(smallStar(largeStar(edges)), eager = false)
       val nextSig = signature(next)
       if (nextSig == sig) {
         // exact confirmation, terminal round only: equal counts (from the
@@ -1211,13 +1145,13 @@ object Dedup {
         // anti-join job at the fixpoint, zero cost on every other round
         converged = next.join(edges, Seq("u", "v"), "left_anti").isEmpty
       }
-      GraftSqlBridge.unpersistCheckpoint(edges, blocking = false)
+      Par.unpin(edges)
       edges = next
       sig = nextSig
       iter += 1
     }
     if (!converged) {
-      GraftSqlBridge.unpersistCheckpoint(edges, blocking = true)
+      Par.unpin(edges)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
     }
@@ -1227,24 +1161,11 @@ object Dedup {
     // node has exactly one edge to its component minimum, and each
     // minimum appears only as a v — so the labeling needs ONLY the final
     // edges, no separate node table. The groupBy(min) form is robust to
-    // any duplicate u rows and ends in a shuffle, which matters below.
-    val labeled = edges.select(col("u").as("node"), col("v").as("component"))
+    // any duplicate u rows. The fixpoint edges stay pinned until the
+    // query's drain: the caller's action may re-plan and read them again.
+    edges.select(col("u").as("node"), col("v").as("component"))
       .union(edges.select(col("v").as("node"), col("v").as("component")))
       .groupBy(col("node")).agg(min(col("component")).as("component"))
-
-    // Block-release discipline: the per-round checkpoints were released
-    // as each round superseded them; the FIXPOINT edge set (O(nodes) —
-    // one star edge per non-minimum node, far below the input edge
-    // volume) must outlive this call because the caller's action may
-    // re-plan the query (a DataFrameWriter builds a fresh
-    // QueryExecution, so shuffle-output reuse cannot be assumed — the
-    // prior eager unpersist here made write-after-CC fail with
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in the gate-lifted q43 run).
-    // Deferred release via the persisted-registry lifecycle: Verify,
-    // Bench, and ScaleProbe drain it between queries, so a long-lived
-    // session still accumulates nothing.
-    trackCheckpoint(edges)
-    labeled
   }
 
   // ------------------------------------------------- exact substring dedup

@@ -39,25 +39,11 @@ object Quantiles {
     // ranked branch's partition ids — silently scrambled global ranks.
     // Found via a consecutive-rank self-join whose pairs flaked run to
     // run (9,256/9,995 wrong pairings in one execution); every previous
-    // caller happened to get exchange reuse. localCheckpoint pins ONE
+    // caller happened to get exchange reuse. Par.pin pins ONE
     // physical partitioning that both branches read — the correctness of
     // the rank now no longer depends on an optimizer reuse heuristic.
-    // (Blocks are registered with the dedup checkpoint registry so the
-    // releasePersisted drain point reclaims them; re-planned consumers
-    // may re-read them until then.)
-    // Cluster posture (-Dgraft.rank.pin=reliable): localCheckpoint blocks
-    // are executor-local and unreplicated with lineage truncated, so on a
-    // real cluster an executor loss mid-query kills the job. The reliable
-    // spelling pins the same single physical partitioning through the
-    // checkpoint DIRECTORY (spark.checkpoint.dir / setCheckpointDir —
-    // required), surviving executor loss at the cost of one write+read of
-    // the stamped frame. local[*] keeps the executor-storage default.
-    val stamped = df.repartitionByRange(nParts, keys: _*)
-      .withColumn("__pid", spark_partition_id())
-    val parts = sys.props.getOrElse("graft.rank.pin", "local") match {
-      case "reliable" => stamped.checkpoint()
-      case _ => graft.ops.Dedup.trackCheckpoint(stamped.localCheckpoint())
-    }
+    val parts = Par.pin(df.repartitionByRange(nParts, keys: _*)
+      .withColumn("__pid", spark_partition_id()))
     val ranked = parts.withColumn("__local", row_number().over(
       Window.partitionBy(("__pid" +: groupCols).map(col): _*)
         .orderBy(orderCols.map(col): _*)))

@@ -347,14 +347,14 @@ object Sampling {
       keepFrac: Double = 0.1): DataFrame = {
     val base = docs.select(col(idCol).as("id"), col(textCol).as("text"),
       isTarget.as("tgt"))
-    val feats = base
+    // pinned: feeds the count collect, the scoring pass, and K
+    val feats = Par.pin(base
       .select(col("id"), col("tgt"),
         explode(split(lower(col("text")), "\\s+")).as("tok"))
       .filter(col("tok") =!= "")
       .withColumn("b", graft.ops.Classify.tokenBucket(col("tok"), dim))
       .groupBy(col("id"), col("tgt"), col("b"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // feeds the count collect, the scoring pass, and K
+      .agg(count(lit(1)).as("cnt")))
 
     val tot = feats.agg(
       sum(when(col("tgt"), col("cnt")).otherwise(0L)),

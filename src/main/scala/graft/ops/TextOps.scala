@@ -940,15 +940,13 @@ object TextOps {
     // into each branch's explode subtree, so canonicalization differs and
     // exchange reuse never fires — per-stage metrics showed the corpus
     // explode map stage executing FOUR times (4× the scan + lambda-explode
-    // CPU and 4× its shuffle write). localCheckpoint truncates the lineage
-    // into one LogicalRDD every consumer reads (the q192/q201 pattern;
+    // CPU and 4× its shuffle write). Par.pin truncates the lineage into
+    // one LogicalRDD every consumer reads (the q192/q201 pattern;
     // persist() is defeated by the HOF-lambda plan's canonicalization).
     // evc is the aggregate — (src × trigram)-scale, far smaller than the
-    // token stream — and the blocks drain at releasePersisted.
-    val evc = graft.ops.Dedup.trackCheckpoint(
-      ev.groupBy(col("src"), col("u"), col("v"), col("w"))
-        .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint())
+    // token stream.
+    val evc = Par.pin(ev.groupBy(col("src"), col("u"), col("v"), col("w"))
+      .agg(count(lit(1)).as("cnt")))
     val c3 = evc.groupBy(col("u"), col("v"), col("w"))
       .agg(sum(col("cnt")).as("c3"))
     val c2 = c3.groupBy(col("u"), col("v"))

@@ -27,19 +27,15 @@ object GraftSqlBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Release the storage blocks of a `localCheckpoint`ed Dataset.
-    *
-    * `Dataset.unpersist()` only uncaches CacheManager entries — a
-    * checkpointed Dataset's data lives on the INTERNAL RDD behind its
-    * `LogicalRDD` node, which unpersist never touches, so iterative
-    * algorithms that checkpoint per round would leak storage blocks for
-    * the whole session (they are only reclaimed when the GC happens to
-    * collect the RDD reference). This frees them deterministically.
+  /** The internal RDD behind a checkpointed Dataset's `LogicalRDD`: its
+    * blocks (`localCheckpoint`) or its files (`checkpoint`) hold the
+    * data. `Dataset.unpersist()` only uncaches CacheManager entries and
+    * never touches this RDD, so releasing a checkpoint goes through it.
     */
-  def unpersistCheckpoint(ds: Dataset[_], blocking: Boolean): Unit =
+  def checkpointRdd(ds: Dataset[_]): Option[org.apache.spark.rdd.RDD[_]] =
     ds.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed match {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking)
-      case _                        => ()
+      case lr: execution.LogicalRDD => Some(lr.rdd)
+      case _                        => None
     }
 
   /** Streaming-flagged DataFrame over a computed InternalRow RDD — how a

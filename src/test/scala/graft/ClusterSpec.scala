@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.log.SharedFixtures
 import graft.server.{GraftServer, ServerConfig}
 
@@ -46,6 +48,12 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   var server: GraftServer = _
+
+  /** (rows, content hash) of the executor-loss test's two answers, as
+    * one JVM at local[4] computes them.
+    */
+  private val DupsAnswer = (28L, -1001150026733L)
+  private val RanksAnswer = (1500L, 20131997412413L)
 
   override def beforeAll(): Unit = {
     if (!sparkHome.exists(h => new java.io.File(h).isDirectory)) return
@@ -182,5 +190,47 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       build.select(col("o_orderkey").as("l_orderkey")).distinct(),
       Seq("l_orderkey"), "left_semi").count()
     assert(got === expected)
+  }
+
+  test("pinned dedup and rank frames keep their single-JVM answers after " +
+    "an executor is lost, when the session has a checkpoint directory") {
+    requireSparkHome()
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-pins")
+    sc.setCheckpointDir(dir.toString)
+    def fingerprint(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val h = shiftright(xxhash64(df.columns.map(col): _*), 24)
+      val r = df.agg(count(lit(1)), coalesce(sum(h), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    // q93's shape (pinned shingle sets) and a pinned range-stamped rank;
+    // the expected fingerprints are these calls' answers at local[4]
+    val dups = graft.ops.Dedup.nearDuplicatesLshPortable(
+        spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text",
+        threshold = 0.7)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    val ranks = graft.ops.Quantiles.withGroupRank(
+        spark.read.parquet(s"$sfDir/orders.parquet"),
+        Seq("o_orderstatus"), Seq("o_orderkey"))
+      .select(col("o_orderstatus"), col("o_orderkey"), col("__rn"), col("__n"))
+    val expected = Seq(DupsAnswer, RanksAnswer)
+    assert(Seq(dups, ranks).map(fingerprint) === expected)
+    // both executors ran the pins' tasks and now hold the consumers'
+    // shuffle and cached blocks; lose one of them
+    def alive = sc.statusTracker.getExecutorInfos.length // with the driver's
+    assert(alive === 3)
+    val victim = sc.parallelize(1 to 16, 16)
+      .map(_ => org.apache.spark.SparkEnv.get.executorId).collect().min
+    assert(sc.killExecutor(victim))
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (alive > 2 && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(alive === 2, s"executor $victim was not removed")
+    // fresh plans: they read the pins from the checkpoint directory
+    assert(Seq(dups, ranks).map(fingerprint) === expected)
+    graft.ops.Dedup.releasePersisted()
+    val left = java.nio.file.Files.walk(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("rdd-")).toSeq
+    assert(left.isEmpty, s"the drain left checkpoint files: $left")
+    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 }

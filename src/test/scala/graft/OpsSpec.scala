@@ -650,6 +650,117 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     ranks.values.foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-9))
     Dedup.releasePersisted()
     assert(leaked.isEmpty, s"pageRank blocks survive releasePersisted: $leaked")
+    // every other operator that pins or cuts: same re-plan, same drain
+    val timed = Seq((1L, 2L, 10L), (2L, 3L, 20L), (3L, 4L, 30L), (4L, 5L, 5L))
+      .toDF("src", "dst", "t")
+    val weighted = timed.withColumnRenamed("t", "w")
+    val seeds = Seq(1L).toDF("seed")
+    val undirected = Seq((0L, 1L), (1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")
+    val redirects = (Seq("a" -> "b", "b" -> "c", "c" -> "T", "x" -> "y",
+      "y" -> "x") ++ (0 until 9).map(i => s"l$i" -> s"l${i + 1}"))
+      .toDF("src", "dst")
+    val grouped = (1 to 200).map(i => (s"g${i % 3}", i.toLong, s"p$i"))
+      .toDF("g", "v", "payload")
+    val others: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "temporalReachability" ->
+        (() => Analytics.temporalReachability(timed, seeds, maxHops = 3)),
+      "boundedShortestPaths" ->
+        (() => Analytics.boundedShortestPaths(weighted, seeds, maxHops = 3)),
+      "neighborhoodFunction exact" ->
+        (() => Analytics.neighborhoodFunction(undirected, maxHops = 4)),
+      "neighborhoodFunction HyperBall" ->
+        (() => Analytics.neighborhoodFunction(undirected, maxHops = 4,
+          exactNodeThreshold = 0L)),
+      "resolveRedirects" ->
+        (() => Crawl.resolveRedirects(redirects, "src", "dst", maxHops = 8)),
+      "withGroupRank" ->
+        (() => Quantiles.withGroupRank(grouped, Seq("g"), Seq("v"))),
+      "kCoreMembers" ->
+        (() => Analytics.kCoreMembers(undirected, k = 1, rounds = 2)))
+    for ((name, run) <- others) {
+      val out = run()
+      out.write.format("noop").mode("overwrite").save()
+      assert(out.collect().nonEmpty, name)
+      Dedup.releasePersisted()
+      assert(leaked.isEmpty, s"$name blocks survive releasePersisted: $leaked")
+    }
+  }
+
+  test("a query's drain releases only its own pins: a pinned near-dup " +
+    "query on another thread survives it and keeps its blocks") {
+    val docs = docsDF(Seq(1L -> base, 2L -> base.replace("quick", "rapid"),
+      3L -> "completely different content about spark query engines"))
+    def query() = Dedup.nearDuplicatesLshPortable(docs, "doc_id", "text",
+      threshold = 0.5)
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persistent
+    val aBuilt = new java.util.concurrent.CountDownLatch(1)
+    val bDrained = new java.util.concurrent.CountDownLatch(1)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def thread(body: => Unit) = new Thread(() =>
+      try body catch { case t: Throwable => failure.compareAndSet(null, t) }
+      finally { aBuilt.countDown(); bDrained.countDown() })
+    val a = thread {
+      val out = query()
+      val expected = out.collect().toSet
+      val mine = persistent -- before
+      assert(mine.nonEmpty, "the pinned query holds no blocks")
+      aBuilt.countDown()
+      bDrained.await()
+      // B's drain must not have taken A's pins: A's re-planning write
+      // reads them again
+      out.write.format("noop").mode("overwrite").save()
+      assert(out.collect().toSet === expected)
+      assert(mine.subsetOf(persistent), "another query's drain took A's blocks")
+      Dedup.releasePersisted()
+      assert((mine & persistent).isEmpty, "A's own drain left its blocks")
+    }
+    val b = thread {
+      aBuilt.await()
+      query().collect()
+      Dedup.releasePersisted()
+    }
+    a.start(); b.start(); a.join(); b.join()
+    Option(failure.get).foreach(t => throw t)
+  }
+
+  test("pins made in a stream's micro-batches belong to the query that " +
+    "started the stream") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    Dedup.releasePersisted()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
+    input.addData(1L to 100L)
+    val q = input.toDF().writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        Par.pin(batch).count(); () }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
+      "the micro-batch pin holds no blocks")
+    Dedup.releasePersisted()
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "the starter's drain left the micro-batch pins")
+  }
+
+  test("pins are made and released only through Par") {
+    // every pin must be registered with its query when it is made; a
+    // direct checkpoint call elsewhere would bypass that lifecycle
+    val banned = Seq("localCheckpoint(", ".checkpoint(", "unpersistCheckpoint(",
+      "trackCheckpoint", "trackPersist", "graft.rank.pin")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(java.nio.file.Paths.get("graft/ops/Par.scala")))
+      .toSeq
+    assert(files.size > 50, s"source tree not found under $root")
+    val hits = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      b <- banned if line.contains(b)
+    } yield s"$f:${i + 1}: $b"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("equi-depth histogram matches SQL NTILE semantics incl. remainders") {
